@@ -19,4 +19,11 @@ Layout
 - ``streaming``  Structured Streaming progress / incremental jobs
 """
 
+from ._lazy_zipimport import install as _install_lazy_zipimport
+
 __version__ = "0.1.0"
+
+# Spark's Python workers import this package when they unpickle an
+# engine UDF; from then on each task's importlib.invalidate_caches()
+# stops re-reading pyspark.zip and the Spark jar (see _lazy_zipimport).
+_install_lazy_zipimport()

@@ -161,9 +161,9 @@ def _normalize_series_arrow(s):
     ``pyarrow.compute.replace_substring_regex`` (C++ RE2, zero Python
     per match) — identical output BY CONSTRUCTION (same per-rule global
     replace; RE2's \\b is the shared dialect's ASCII definition).
-    ~3.3x faster than the fused Python chain on corpus text, which
-    directly raises extraction docs/s (normalization dominates the
-    kernel profile)."""
+    ~3.3x faster than the fused Python chain on corpus text.
+    Normalization is not the largest kernel cost: on the mixed
+    benchmark corpus XY-cut reading order takes about twice as long."""
     arr = _pa.array(s.fillna(""), type=_pa.string())
     for r in RULES:
         arr = _pc.replace_substring_regex(

@@ -49,16 +49,28 @@ _REAL_MAGICS = {
 }
 
 
+def _check_payload(payload: np.ndarray, dtype, n: int) -> None:
+    """An explicit payload must be exactly what its header declares."""
+    if payload.dtype != dtype or payload.size != n:
+        raise ValueError(
+            f"payload is {payload.size} x {payload.dtype}; "
+            f"the header declares {n} x {np.dtype(dtype)}"
+        )
+
+
 def encode_fake_image(
     width: int, height: int, seed: int = 0, pixels: np.ndarray | None = None
 ) -> bytes:
     """``pixels`` (uint8, length width*height) plants an explicit
     payload — the single header-layout definition for callers that
     need arithmetically-known content (q238's oracle); the seed path
-    plants RNG content for fixtures that only need determinism."""
+    plants RNG content for fixtures that only need determinism.
+    Explicit payloads of another length or dtype raise ``ValueError``
+    (as in ``encode_fake_audio`` / ``encode_fake_video``)."""
     if pixels is None:
         rng = np.random.default_rng(seed)
         pixels = rng.integers(0, 256, size=width * height, dtype=np.uint8)
+    _check_payload(pixels, np.uint8, width * height)
     return MAGIC_IMG + struct.pack("<II", width, height) + pixels.tobytes()
 
 
@@ -71,6 +83,7 @@ def encode_fake_audio(
     if samples is None:
         rng = np.random.default_rng(seed)
         samples = rng.integers(-(2**15), 2**15, size=n_samples, dtype=np.int16)
+    _check_payload(samples, np.int16, n_samples)
     return (
         MAGIC_AUD + struct.pack("<II", sample_rate, n_samples) + samples.tobytes()
     )
@@ -86,6 +99,7 @@ def encode_fake_video(
     if pixels is None:
         rng = np.random.default_rng(seed)
         pixels = rng.integers(0, 256, size=n_frames * w * h, dtype=np.uint8)
+    _check_payload(pixels, np.uint8, n_frames * w * h)
     return MAGIC_VID + struct.pack("<III", n_frames, w, h) + pixels.tobytes()
 
 

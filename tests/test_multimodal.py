@@ -99,6 +99,30 @@ def test_fake_codecs_roundtrip():
     assert encode_fake_video(2, 4, 4, seed=1) == encode_fake_video(2, 4, 4, seed=1)
 
 
+def test_fake_image_rejects_payload_that_disagrees_with_header():
+    assert len(encode_fake_image(3, 2, pixels=np.zeros(6, np.uint8))) == 12 + 6
+    with pytest.raises(ValueError):
+        encode_fake_image(3, 2, pixels=np.zeros(5, np.uint8))
+    with pytest.raises(ValueError):
+        encode_fake_image(3, 2, pixels=np.zeros(6, np.int16))
+
+
+def test_fake_audio_rejects_payload_that_disagrees_with_header():
+    assert len(encode_fake_audio(8000, 4, samples=np.zeros(4, np.int16))) == 12 + 8
+    with pytest.raises(ValueError):
+        encode_fake_audio(8000, 4, samples=np.zeros(3, np.int16))
+    with pytest.raises(ValueError):
+        encode_fake_audio(8000, 4, samples=np.zeros(4, np.int64))
+
+
+def test_fake_video_rejects_payload_that_disagrees_with_header():
+    assert len(encode_fake_video(2, 3, 2, pixels=np.zeros(12, np.uint8))) == 16 + 12
+    with pytest.raises(ValueError):
+        encode_fake_video(2, 3, 2, pixels=np.zeros(6, np.uint8))
+    with pytest.raises(ValueError):
+        encode_fake_video(2, 3, 2, pixels=np.zeros(12, np.float64))
+
+
 def test_q110_ahash_finds_exactly_the_planted_variants(spark):
     """Every planted (base, variant) pair is detected within the
     hamming budget, no unplanted pair sneaks in, and the truncated
