@@ -7,7 +7,8 @@ per image, ``german_ocr/ollama_backend.py:103-150``; here it is a pure,
 deterministic classifier over serialized DOM-node tables so output is
 bitwise-identical across cluster sizes).
 
-Algorithm (all pandas groupby/agg — no per-row Python, no tree recursion):
+Algorithm (pandas groupby/agg and Arrow joins — no per-row Python, no
+tree recursion):
   1. node features: text_len; link_len = text_len where tag == 'a'
   2. block rollup (groupby block): total text, total link text, node
      count, block tag = tag of the block's first node (min node_id)
@@ -23,6 +24,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from .join import join_runs
+
 BOILER_TAGS = frozenset(
     {"nav", "footer", "header", "aside", "script", "style", "form", "button"}
 )
@@ -30,42 +33,15 @@ MIN_TEXT_LEN = 30
 MAX_LINK_DENSITY = 1.0 / 3.0
 
 
-def score_blocks(nodes: pd.DataFrame) -> pd.DataFrame:
-    """Node frame (span_idx, node_id, tag, block_id, text) → block frame
-    with features + is_content label. Pure function; unit-testable."""
-    df = nodes.copy()
-    df["text"] = df["text"].fillna("")
-    df["text_len"] = df["text"].str.len().astype("int64")
-    df["link_len"] = df["text_len"].where(df["tag"] == "a", 0)
-    df = df.sort_values(["span_idx", "block_id", "node_id"], kind="mergesort")
-
-    grp = df.groupby(["span_idx", "block_id"], sort=True)
-    blocks = grp.agg(
-        text_len=("text_len", "sum"),
-        link_len=("link_len", "sum"),
-        n_nodes=("node_id", "size"),
-        block_tag=("tag", "first"),  # first node in node_id order
-        text=("text", lambda s: " ".join(x for x in s if x)),
-    ).reset_index()
-
-    dens = blocks["link_len"] / blocks["text_len"].where(blocks["text_len"] > 0, 1)
-    blocks["link_density"] = dens
-    blocks["is_content"] = (
-        ~blocks["block_tag"].isin(BOILER_TAGS)
-        & (blocks["text_len"] >= MIN_TEXT_LEN)
-        & (dens < MAX_LINK_DENSITY)
-    )
-    return blocks
-
-
 def extract_main_content(nodes: pd.DataFrame) -> pd.Series:
-    """Node frame → Series indexed by span_idx with the main-content text
-    (content blocks joined by newline, in block_id order).
+    """Node frame → Series indexed by span_idx with the main-content text:
+    content blocks in block_id order joined by newline, each block's
+    non-empty node texts in node_id order joined by ' '. A span whose
+    blocks are all boilerplate yields ''.
 
-    Hot-path variant of score_blocks + join: block classification stays
-    a cython groupby; the final text is assembled with ONE string join
-    per span (separator chosen per node from block/span boundary masks)
-    instead of a Python lambda per block — byte-identical output."""
+    Block classification is a cython groupby; the text is assembled by
+    two Arrow run joins (``join_runs``: nodes into blocks, blocks into
+    spans), with no Python per block or span."""
     if nodes.empty:
         return pd.Series([], dtype=object)
     df = nodes.copy()
@@ -92,23 +68,13 @@ def extract_main_content(nodes: pd.DataFrame) -> pd.Series:
 
     # broadcast the block label back to nodes positionally (both frames
     # share the (span_idx, block_id) sort)
-    node_flag = np.repeat(is_content.to_numpy(), blocks["n"].to_numpy())
-    keep = node_flag & (df["text_len"].to_numpy() > 0)
-    sub = df[keep]
-    if sub.empty:
-        # every block in the batch was boilerplate (possible in small /
-        # streaming micro-batches): each span still yields '' text —
-        # without this guard the length-1 np.r_ seed below cannot align
-        # with the 0-row frame and the task would die on clean data
-        all_spans = blocks["span_idx"].drop_duplicates()
-        return pd.Series("", index=pd.Index(all_spans.to_numpy()), dtype=object)
-    span_arr = sub["span_idx"].to_numpy()
-    block_arr = sub["block_id"].to_numpy()
-    new_span = np.r_[True, span_arr[1:] != span_arr[:-1]]
-    new_block = np.r_[True, block_arr[1:] != block_arr[:-1]] | new_span
-    sep = np.where(new_span, "", np.where(new_block, "\n", " "))
-    piece = pd.Series(sep, index=sub.index, dtype=object) + sub["text"]
-    joined = piece.groupby(span_arr).agg("".join)
-    # Spans whose blocks were all boilerplate still yield '' (not missing).
-    all_spans = blocks["span_idx"].drop_duplicates()
-    return joined.reindex(all_spans.to_numpy(), fill_value="")
+    node_block = np.repeat(np.arange(len(blocks)), blocks["n"].to_numpy())
+    keep = is_content.to_numpy()[node_block] & (df["text_len"].to_numpy() > 0)
+    kept_block = node_block[keep]
+    block_starts = np.flatnonzero(np.diff(kept_block, prepend=-1))
+    block_text = join_runs(df["text"].to_numpy()[keep], block_starts, " ")
+    # a span without content blocks gets an empty run, which joins to ''
+    block_span = blocks["span_idx"].to_numpy()[kept_block[block_starts]]
+    all_spans = blocks["span_idx"].drop_duplicates().to_numpy()
+    content = join_runs(block_text, np.searchsorted(block_span, all_spans), "\n")
+    return pd.Series(content.to_numpy(zero_copy_only=False), index=all_spans)

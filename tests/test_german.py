@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from german_ocr_spark.functions.german import (
+    _COMPILED,
     normalize_col,
     normalize_series,
     normalize_sql,
@@ -69,20 +70,28 @@ def _corruption_soup(n=3000, seed=1234):
     ]
 
 
-@pytest.mark.parametrize("kernel_name", [
-    "normalize_series",            # the dispatching default (Arrow here)
-    "_normalize_series_arrow",     # RE2 fast path, pinned explicitly
-    "_normalize_series_sequential",  # pyarrow-less fallback
-])
-def test_every_kernel_path_equals_rule_chain_brute_force(kernel_name):
-    """EVERY normalize kernel path must equal the literal rule chain
-    (normalize_text) on dense random corruption soup — including the
-    fallback that normal runs never dispatch to (a fused fallback once
-    silently diverged exactly because only the default path was
-    exercised)."""
-    from german_ocr_spark.functions import german as g
+def _normalize_series_sequential(s):
+    """Parity oracle: the RULES chain applied literally with Python
+    ``re``, one ``Series.str.replace`` pass per rule. (A 5-pass "fused"
+    chain broke its own fusion proof when \\b became ASCII lookarounds:
+    fusing the ſ-rules with the ``nnd`` rules lets the lookaround see
+    the pre-ſ→s text, so ``Bünndſ`` diverged — keep it literal.)"""
+    out = s.fillna("")
+    for pat, repl in _COMPILED:
+        out = out.str.replace(pat, repl, regex=True)
+    out = out.str.strip()
+    return out.where(~s.isna(), None)
 
-    kernel = getattr(g, kernel_name)
+
+@pytest.mark.parametrize("kernel", [
+    normalize_series,              # the Arrow/RE2 kernel the pipeline runs
+    _normalize_series_sequential,  # Python-regex chain, a second oracle
+], ids=lambda f: f.__name__)
+def test_every_kernel_path_equals_rule_chain_brute_force(kernel):
+    """Every normalize implementation must equal the literal rule chain
+    (normalize_text) on dense random corruption soup — a fused chain
+    once silently diverged exactly because only one path was
+    exercised."""
     raws = _corruption_soup()
     got = kernel(pd.Series(raws, dtype=object)).tolist()
     want = [normalize_text(x) for x in raws]

@@ -6,11 +6,57 @@ from __future__ import annotations
 import pandas as pd
 
 from german_ocr_spark.kernels import boilerplate, parse, xycut
+from german_ocr_spark.kernels.boilerplate import (
+    BOILER_TAGS,
+    MAX_LINK_DENSITY,
+    MIN_TEXT_LEN,
+)
 from german_ocr_spark.kernels.parse import RS, US
+from german_ocr_spark.synth import synth_docs
 
 
 def _nodes(rows):
     return pd.DataFrame(rows, columns=["span_idx", "node_id", "tag", "block_id", "text"])
+
+
+def score_blocks(nodes: pd.DataFrame) -> pd.DataFrame:
+    """Block-label oracle: node frame (span_idx, node_id, tag, block_id,
+    text) → block frame with features, the block's text (non-empty node
+    texts joined by ' ') and the is_content label, one groupby with a
+    Python join per block."""
+    df = nodes.copy()
+    df["text"] = df["text"].fillna("")
+    df["text_len"] = df["text"].str.len().astype("int64")
+    df["link_len"] = df["text_len"].where(df["tag"] == "a", 0)
+    df = df.sort_values(["span_idx", "block_id", "node_id"], kind="mergesort")
+
+    grp = df.groupby(["span_idx", "block_id"], sort=True)
+    blocks = grp.agg(
+        text_len=("text_len", "sum"),
+        link_len=("link_len", "sum"),
+        n_nodes=("node_id", "size"),
+        block_tag=("tag", "first"),  # first node in node_id order
+        text=("text", lambda s: " ".join(x for x in s if x)),
+    ).reset_index()
+
+    dens = blocks["link_len"] / blocks["text_len"].where(blocks["text_len"] > 0, 1)
+    blocks["link_density"] = dens
+    blocks["is_content"] = (
+        ~blocks["block_tag"].isin(BOILER_TAGS)
+        & (blocks["text_len"] >= MIN_TEXT_LEN)
+        & (dens < MAX_LINK_DENSITY)
+    )
+    return blocks
+
+
+def _content_by_oracle(nodes: pd.DataFrame) -> dict:
+    """Main content from the oracle's labels: content block texts joined
+    by newline in block_id order; '' for spans without content."""
+    blocks = score_blocks(nodes)
+    return {
+        span: "\n".join(g.loc[g["is_content"], "text"])
+        for span, g in blocks.groupby("span_idx", sort=True)
+    }
 
 
 def test_boilerplate_drops_nav_and_linkdense():
@@ -26,7 +72,7 @@ def test_boilerplate_drops_nav_and_linkdense():
             (0, 7, "footer", 4, "Impressum Datenschutz AGB Impressum Datenschutz"),
         ]
     )
-    blocks = boilerplate.score_blocks(nodes)
+    blocks = score_blocks(nodes)
     by_id = blocks.set_index("block_id")["is_content"].to_dict()
     assert by_id == {0: False, 1: True, 2: False, 3: True, 4: False}
 
@@ -35,6 +81,7 @@ def test_boilerplate_drops_nav_and_linkdense():
         "Dies ist ein langer Artikelabsatz mit viel Inhalt.\n"
         "Ein weiterer langer Absatz voller echtem Inhalt hier. x"
     )
+    assert content.to_dict() == _content_by_oracle(nodes)
 
 
 def test_boilerplate_link_density_threshold():
@@ -47,9 +94,25 @@ def test_boilerplate_link_density_threshold():
             (1, 1, "a", 0, "y" * 10),  # density 1/6 → content
         ]
     )
-    blocks = boilerplate.score_blocks(nodes)
+    blocks = score_blocks(nodes)
     got = blocks.set_index(["span_idx", "block_id"])["is_content"].to_dict()
     assert got == {(0, 0): False, (1, 0): True}
+
+
+def test_main_content_equals_oracle_labels_joined():
+    """The Arrow-joined main content equals the oracle's content blocks
+    joined in block_id order, on the synthesizer's HTML spans (some of
+    them all boilerplate) plus a span of empty and missing node texts."""
+    spans = [
+        text for _, doc in synth_docs(300, seed=11) for kind, text, _, _ in doc
+        if kind == "html"
+    ]
+    nodes, _bad = parse.parse_html_nodes(pd.Series(spans, dtype=object))
+    extra = _nodes([(len(spans), 0, "p", 0, None), (len(spans), 1, "p", 0, "")])
+    nodes = pd.concat([nodes, extra], ignore_index=True)
+    want = _content_by_oracle(nodes)
+    assert sum(v == "" for v in want.values()) > 0
+    assert boilerplate.extract_main_content(nodes).to_dict() == want
 
 
 def _blocks(rows):
